@@ -49,7 +49,7 @@ def main() -> None:
         F.to_timestamp(F.from_unixtime(F.col("ts_s"))).alias("warc_ts"),
         F.col("payload").alias("html"),
         F.regexp_extract(
-            F.col("payload").cast("string"), "<body>(.*)</body>", 1
+            F.col("payload").cast("string"), "(?s)<body>(.*)</body>", 1
         ).alias("text"),
         "lang",
     )
@@ -117,7 +117,7 @@ def main() -> None:
     extracted = scheduled.withColumn(
         "main_text",
         F.regexp_replace(
-            F.regexp_extract(F.col("html").cast("string"), "<body>(.*)</body>", 1),
+            F.regexp_extract(F.col("html").cast("string"), "(?s)<body>(.*)</body>", 1),
             "<[^>]*>",
             "",
         ),

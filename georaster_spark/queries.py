@@ -3091,6 +3091,7 @@ def sql_url_dedup():
 
 _ROBOTS_DIRS = ["a", "b", "c", "d"]
 _ROBOTS_N_RULES = 8  # per host: 4 broad ('/a'..'/d') + 4 deep
+_ROBOTS_HOSTS = 20  # src0..src19, the datagen sources
 FRONTIER_BUDGET = 4
 FRONTIER_EPOCH0 = 1700000000
 
@@ -3109,6 +3110,7 @@ def q_robots_filter(spark, sf_dir):
     window — no per-host serialization on the URL side."""
     from georaster_spark.operators.crawl import robots_verdicts
 
+    nd = len(_ROBOTS_DIRS)
     dirs = F.array(*[F.lit(x) for x in _ROBOTS_DIRS])
     d = _t(spark, sf_dir, "documents")
     urls = d.select(
@@ -3116,21 +3118,21 @@ def q_robots_filter(spark, sf_dir):
         F.concat(F.col("source"), F.lit(".example.com")).alias("host"),
         F.concat(
             F.lit("/"),
-            F.element_at(dirs, (F.col("doc_id") % 4).cast("int") + 1),
+            F.element_at(dirs, (F.col("doc_id") % nd).cast("int") + 1),
             F.lit("/"),
             (F.col("doc_id") % 40).cast("string"),
         ).alias("path"),
     )
-    r = spark.range(20 * _ROBOTS_N_RULES).select(
+    r = spark.range(_ROBOTS_HOSTS * _ROBOTS_N_RULES).select(
         F.floor(F.col("id") / _ROBOTS_N_RULES).alias("s"),
         (F.col("id") % _ROBOTS_N_RULES).alias("i"),
     )
-    rdir = F.element_at(dirs, (F.col("i") % 4).cast("int") + 1)
+    rdir = F.element_at(dirs, (F.col("i") % nd).cast("int") + 1)
     rules = r.select(
         F.concat(F.lit("src"), F.col("s").cast("string"), F.lit(".example.com")).alias(
             "host"
         ),
-        F.when(F.col("i") < 4, F.concat(F.lit("/"), rdir))
+        F.when(F.col("i") < nd, F.concat(F.lit("/"), rdir))
         .otherwise(
             F.concat(
                 F.lit("/"),
@@ -3146,22 +3148,24 @@ def q_robots_filter(spark, sf_dir):
 
 
 def sql_robots_filter():
-    return """
+    k, nd, n_hosts = _ROBOTS_N_RULES, len(_ROBOTS_DIRS), _ROBOTS_HOSTS
+    dirs = "[" + ",".join(f"'{x}'" for x in _ROBOTS_DIRS) + "]"
+    return f"""
     WITH urls AS (
       SELECT doc_id, source || '.example.com' AS host,
-             '/' || list_extract(['a','b','c','d'], CAST(doc_id % 4 AS INT) + 1)
+             '/' || list_extract({dirs}, CAST(doc_id % {nd} AS INT) + 1)
              || '/' || CAST(doc_id % 40 AS VARCHAR) AS path
       FROM documents
     ),
     rules AS (
-      SELECT 'src' || CAST(range // 8 AS VARCHAR) || '.example.com' AS host,
-             CASE WHEN range % 8 < 4
-                  THEN '/' || list_extract(['a','b','c','d'], CAST(range % 8 % 4 AS INT) + 1)
-                  ELSE '/' || list_extract(['a','b','c','d'], CAST(range % 8 % 4 AS INT) + 1)
-                       || '/' || CAST(((range // 8) * 7 + (range % 8) * 13) % 40 AS VARCHAR)
+      SELECT 'src' || CAST(range // {k} AS VARCHAR) || '.example.com' AS host,
+             CASE WHEN range % {k} < {nd}
+                  THEN '/' || list_extract({dirs}, CAST(range % {k} % {nd} AS INT) + 1)
+                  ELSE '/' || list_extract({dirs}, CAST(range % {k} % {nd} AS INT) + 1)
+                       || '/' || CAST(((range // {k}) * 7 + (range % {k}) * 13) % 40 AS VARCHAR)
              END AS prefix,
-             ((range // 8) + (range % 8)) % 3 = 0 AS allow
-      FROM range(160)
+             ((range // {k}) + (range % {k})) % 3 = 0 AS allow
+      FROM range({n_hosts} * {k})
     ),
     m AS (
       SELECT u.doc_id, r.allow, r.prefix,
@@ -5140,7 +5144,7 @@ def sql_pip_join_hot():
 
 def q_ice_prune(spark, sf_dir):
     """Iceberg-style file skipping, measured end-to-end (E10 +
-    sources/icetable.py collect_file_stats/plan_files): orders are
+    sources/icetable.py file_stats/plan_files): orders are
     committed as a snapshot CLUSTERED on order date (disjoint
     per-file date ranges, Iceberg write.sort-order), then a one-year
     range read plans its scan from the manifest's footer stats. The
@@ -5325,7 +5329,8 @@ def q_crawl_delta(spark, sf_dir):
     layer (E10 + the webtext lane): a crawl table (url, lang,
     text_h) gets a deterministic RECRAWL applied as two atomic
     commits — changed pages (doc_id%5: text gains ' v2', so the
-    content hash moves), discovered pages (doc_id%17: new urls), then
+    content hash moves), discovered pages (doc_id%17: new urls under
+    ``/n/``, disjoint from the crawled ``/p/`` urls at any size), then
     vanished pages (doc_id%11==3: deleted) — and the query TIME
     TRAVELS to the pre-recrawl snapshot, full-outer-joins it against
     the live one on url, and classifies every page added / removed /
@@ -5343,7 +5348,7 @@ def q_crawl_delta(spark, sf_dir):
 
     from georaster_spark.sources import icetable
 
-    recipe = "crawlv1:c%5+v2:a%17+new:d%11=3"
+    recipe = "crawlv2:c%5+v2:a%17+new/n:d%11=3"
     tbl = os.path.join(
         tempfile.gettempdir(),
         "georaster_crawl_delta_"
@@ -5376,8 +5381,8 @@ def q_crawl_delta(spark, sf_dir):
             F.concat(
                 F.lit("https://"),
                 F.col("source"),
-                F.lit(".example.com/p/"),
-                (F.col("doc_id") + 10000).cast("string"),
+                F.lit(".example.com/n/"),
+                F.col("doc_id").cast("string"),
             ).alias("url"),
             "lang",
             h(F.concat(F.col("text"), F.lit(" new"))),
@@ -5432,8 +5437,8 @@ def sql_crawl_delta():
       FROM base WHERE doc_id % 5 = 0
     ),
     added AS (
-      SELECT 'https://' || source || '.example.com/p/'
-               || CAST(doc_id + 10000 AS VARCHAR) AS url,
+      SELECT 'https://' || source || '.example.com/n/'
+               || CAST(doc_id AS VARCHAR) AS url,
              lang,
              CAST('0x' || substr(md5(text || ' new'), 1, 15) AS BIGINT) AS text_h
       FROM base WHERE doc_id % 17 = 0

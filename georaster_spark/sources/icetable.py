@@ -15,8 +15,8 @@ implements the same *contract* on plain partitioned Parquet:
 - **time travel**: ``read_table(..., snapshot_id=...)``;
 - **rollback**: repoint without deleting data;
 - **file skipping**: each commit records per-file column min/max/
-  null-count stats (read from the parquet footers in an
-  executor-side kernel — the driver never opens a data file), and
+  null-count stats, read from the parquet footers on the driver
+  (which already lists and sizes every file it commits), and
   ``read_table(..., filters=[...])`` prunes whole files whose stat
   range cannot satisfy the predicate before Spark ever lists them —
   Iceberg's manifest-level ``lower_bounds``/``upper_bounds`` scan
@@ -180,72 +180,46 @@ def _stat_key(v):
     return None
 
 
-def collect_file_stats(spark, table_path: str, files: list[dict]) -> dict[str, dict]:
-    """Per-file column stats from the parquet footers, gathered in an
-    executor-side Arrow kernel (the driver ships relative paths and
-    receives a few rows per file — it opens no data file; same
-    architecture as the raster header kernel). A column whose stats
-    are missing in ANY row group is marked unknown for that file
-    (min/max null => never pruned on)."""
-    if not files:
-        return {}
+def file_stats(file_path: str) -> dict[str, dict]:
+    """Column stats ``{col: {min, max, nulls}}`` of one parquet file,
+    read from its footer on the driver: the driver has just listed
+    and sized every file it commits, and a footer is a few KB, so a
+    direct read is cheaper than any Spark job. A column whose stats
+    are missing in ANY row group is marked unknown for the file
+    (min/max None => never pruned on), but its NULLs still count (an
+    all-NULL row group has a null count and no min/max); nested
+    leaves are skipped."""
+    import pyarrow.parquet as pq
 
-    def kernel(batches):
-        import json as _json
-
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for rel, full in zip(pdf["rel"], pdf["full"]):
-                md = pq.ParquetFile(full).metadata
-                per_col: dict[str, dict] = {}
-                for rg in range(md.num_row_groups):
-                    for ci in range(md.num_columns):
-                        col = md.row_group(rg).column(ci)
-                        name = col.path_in_schema
-                        if "." in name:
-                            continue  # nested leaves: not prunable here
-                        s = col.statistics
-                        cs = per_col.setdefault(
-                            name, {"min": None, "max": None, "nulls": 0, "ok": True}
-                        )
-                        if s is None or not s.has_min_max:
-                            cs["ok"] = False
-                            continue
-                        mn, mx = _stat_key(s.min), _stat_key(s.max)
-                        if mn is None or mx is None:
-                            cs["ok"] = False
-                        else:
-                            cs["min"] = mn if cs["min"] is None else min(cs["min"], mn)
-                            cs["max"] = mx if cs["max"] is None else max(cs["max"], mx)
-                        if s.null_count is not None:
-                            cs["nulls"] += s.null_count
-                for name, cs in per_col.items():
-                    rows.append(
-                        {
-                            "rel": rel,
-                            "col": name,
-                            "stat_json": _json.dumps(
-                                {
-                                    "min": cs["min"] if cs["ok"] else None,
-                                    "max": cs["max"] if cs["ok"] else None,
-                                    "nulls": cs["nulls"],
-                                }
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["rel", "col", "stat_json"])
-
-    paths_df = spark.createDataFrame(
-        [(f["path"], os.path.join(table_path, f["path"])) for f in files],
-        "rel string, full string",
-    ).repartition(max(1, min(len(files), 32)))
-    out: dict[str, dict] = {}
-    for r in paths_df.mapInPandas(kernel, schema="rel string, col string, stat_json string").collect():
-        out.setdefault(r["rel"], {})[r["col"]] = json.loads(r["stat_json"])
-    return out
+    md = pq.ParquetFile(file_path).metadata
+    per_col: dict[str, dict] = {}
+    for rg in range(md.num_row_groups):
+        for ci in range(md.num_columns):
+            col = md.row_group(rg).column(ci)
+            name = col.path_in_schema
+            if "." in name:
+                continue  # nested leaves: not prunable here
+            s = col.statistics
+            cs = per_col.setdefault(name, {"min": None, "max": None, "nulls": 0, "ok": True})
+            if s is not None and s.null_count is not None:
+                cs["nulls"] += s.null_count
+            if s is None or not s.has_min_max:
+                cs["ok"] = False
+                continue
+            mn, mx = _stat_key(s.min), _stat_key(s.max)
+            if mn is None or mx is None:
+                cs["ok"] = False
+            else:
+                cs["min"] = mn if cs["min"] is None else min(cs["min"], mn)
+                cs["max"] = mx if cs["max"] is None else max(cs["max"], mx)
+    return {
+        name: {
+            "min": cs["min"] if cs["ok"] else None,
+            "max": cs["max"] if cs["ok"] else None,
+            "nulls": cs["nulls"],
+        }
+        for name, cs in per_col.items()
+    }
 
 
 def file_matches(f: dict, filters: list[tuple]) -> bool:
@@ -422,11 +396,14 @@ def write_table(
         for n in names:
             if n.endswith(".parquet"):
                 p = os.path.join(root, n)
-                files.append({"path": os.path.relpath(p, path), "bytes": os.path.getsize(p)})
+                files.append(
+                    {
+                        "path": os.path.relpath(p, path),
+                        "bytes": os.path.getsize(p),
+                        "stats": file_stats(p),
+                    }
+                )
     files.sort(key=lambda f: f["path"])  # part order == range order
-    stats = collect_file_stats(df.sparkSession, path, files)
-    for f in files:
-        f["stats"] = stats.get(f["path"], {})
     if mode == "append" and parent is not None:
         pm = read_manifest(path, parent)
         # schema evolution (Iceberg add/drop-column semantics): the
@@ -581,7 +558,10 @@ def merge_table(
     ``updates`` replace current rows with matching ``key_cols``
     (upsert — unmatched updates insert); ``delete=True`` instead
     removes matching keys. One atomic snapshot commit; time travel to
-    the pre-merge state remains until expiry.
+    the pre-merge state remains until expiry. An upsert whose
+    ``updates`` repeat a key raises ``ValueError`` before anything is
+    written (the rows would otherwise all go live as duplicates);
+    repeated delete keys are harmless.
 
     Plan: current LEFT-ANTI-joins the (small, broadcastable) update
     key set — the big side shuffles at most once on the key, and
@@ -589,6 +569,8 @@ def merge_table(
     (merge-on-read) are the scale upgrade when update rate is high;
     the commit contract here is unchanged by that swap.
     """
+    if not delete and updates.groupBy(*key_cols).count().where("count > 1").limit(1).collect():
+        raise ValueError(f"merge updates repeat a key in {key_cols}")
     m = read_manifest(path)
     current = read_table(spark, path)
     keys = updates.select(*key_cols).distinct()

@@ -61,20 +61,68 @@ class TestIceTable:
 
 class TestFileSkipping:
     def test_manifest_carries_footer_stats(self, spark, docs, tmp_path):
+        import datetime
+
+        import pyarrow.parquet as pq
+
         path = str(tmp_path / "fs1")
+        seq = F.col("doc_seq")
         icetable.write_table(
-            docs.select("doc_seq", "url", "lang"), path,
+            docs.select(
+                "doc_seq", "url", "lang",
+                F.date_add(F.lit("2024-01-01").cast("date"), seq.cast("int")).alias("day"),
+                F.when(seq % 3 != 0, seq).alias("sparse"),
+                F.lit(None).cast("long").alias("void"),
+            ),
+            path,
             cluster_by=["doc_seq"], n_files=4,
         )
         m = icetable.read_manifest(path)
         assert len(m["files"]) == 4
+
+        def iso(v):
+            return v.isoformat() if isinstance(v, datetime.date) else v
+
+        # the manifest must say exactly what each file's footer says
         for f in m["files"]:
-            st = f["stats"]["doc_seq"]
-            assert st["min"] is not None and st["min"] <= st["max"]
+            md = pq.ParquetFile(os.path.join(path, f["path"])).metadata
+            want = {}
+            for ci in range(md.num_columns):
+                ss = [md.row_group(g).column(ci).statistics for g in range(md.num_row_groups)]
+                known = all(s is not None and s.has_min_max for s in ss)
+                want[md.schema.column(ci).name] = {
+                    "min": iso(min(s.min for s in ss)) if known else None,
+                    "max": iso(max(s.max for s in ss)) if known else None,
+                    "nulls": sum(s.null_count for s in ss),
+                }
+            assert f["stats"] == want
+            # an all-NULL column has no min/max: unknown, never pruned on
+            assert f["stats"]["void"] == {"min": None, "max": None, "nulls": md.num_rows}
+        assert sum(f["stats"]["sparse"]["nulls"] for f in m["files"]) == 134
         # clustered layout => disjoint doc_seq ranges, union covers all
         lo = min(f["stats"]["doc_seq"]["min"] for f in m["files"])
         hi = max(f["stats"]["doc_seq"]["max"] for f in m["files"])
         assert (lo, hi) == (0, 399)
+        days = [f["stats"]["day"] for f in m["files"]]
+        assert (min(d["min"] for d in days), max(d["max"] for d in days)) == (
+            "2024-01-01", "2025-02-03",
+        )
+
+    def test_write_table_is_one_spark_job(self, spark, docs, tmp_path):
+        """A commit runs the parquet write and nothing else on the
+        cluster: footer stats are read on the driver."""
+        sc = spark.sparkContext
+        group = "icetable-one-job-commit"
+        sc.setJobGroup(group, "write_table job count")
+        try:
+            icetable.write_table(
+                docs.select("doc_seq", "url", "part"), str(tmp_path / "one_job"),
+                partition_by=["part"],
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
     def test_point_read_prunes_to_one_file(self, spark, docs, tmp_path):
         path = str(tmp_path / "fs2")
@@ -428,6 +476,16 @@ class TestMerge:
         t = icetable.read_table(spark, path)
         assert t.count() == 300
         assert t.where(F.col("part") < 2).count() == 0
+
+    def test_upsert_with_repeated_keys_raises_before_writing(self, spark, docs, tmp_path):
+        path = str(tmp_path / "t_dup")
+        pre = icetable.write_table(docs.select("url", "part"), path)
+        upd = docs.where(F.col("part") == 1).select("url", "part")
+        with pytest.raises(ValueError, match="repeat a key"):
+            icetable.merge_table(spark, path, upd.unionByName(upd.limit(1)), key_cols=["url"])
+        assert icetable.current_snapshot(path) == pre
+        assert [m["snapshot_id"] for m in icetable.snapshots(path)] == [pre]
+        assert os.listdir(os.path.join(path, "data")) == [f"snap-{pre}"]
 
 
 class TestPartitionedMaintenance:

@@ -23,6 +23,7 @@ import io
 import os
 import sys
 import re
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -41,6 +42,23 @@ def explain_str(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def normalize_plan(plan: str) -> str:
+    """Plan text with run-specific tokens removed, so the written
+    audit diffs only when a plan changes: expression ids (``#123L``),
+    lambda variable suffixes (``x_660``), JVM object hashes, exchange
+    ``plan_id``s, RDD ids and call sites, and snapshot-table file
+    names (commit timestamp, writer uuid) under the temp dir."""
+    plan = re.sub(r"#\d+L?", "", plan)
+    plan = re.sub(r"\b(lambda \w+?)_\d+\b", r"\1", plan)
+    plan = re.sub(r"@[0-9a-f]{4,}\b", "", plan)
+    plan = re.sub(r",? ?\[plan_id=\d+\]", "", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD", plan)
+    plan = re.sub(r" at [^\s,]+:\d+", "", plan)
+    plan = re.sub(r"snap-\d+-[0-9a-f]+", "snap-*", plan)
+    plan = re.sub(r"part-\d+-[0-9a-f-]{36}-c\d+", "part-*", plan)
+    return plan.replace("file:" + tempfile.gettempdir(), "file:<tmp>")
 
 
 def main() -> int:
@@ -661,7 +679,7 @@ def main() -> int:
             f.write(f"| {name} | {inv} | {'PASS' if ok else 'FAIL'} |\n")
         f.write("\n")
         for name, plan in plans.items():
-            f.write(f"## {name}\n\n```\n{plan.strip()}\n```\n\n")
+            f.write(f"## {name}\n\n```\n{normalize_plan(plan).strip()}\n```\n\n")
 
     failed = [(n, i) for n, i, ok in checks if not ok]
     for n, i, ok in checks:
