@@ -146,10 +146,11 @@ def _probe_mem_ceiling() -> float | None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from georaster_spark.session import get_spark, host_cores
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
     mem_ceiling = _probe_mem_ceiling()
 
-    from georaster_spark.session import get_spark
     from georaster_spark import queries as Q
 
     spark = get_spark("georaster_spark_bench", cores=cpus, shuffle_partitions=cpus)

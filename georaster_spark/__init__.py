@@ -14,9 +14,20 @@ Design rules (see SURVEY.md):
   broadcast cell-cover joins, AQE backstop).
 """
 
-from georaster_spark.grid import RasterGeometry
-from georaster_spark.session import get_spark
+from __future__ import annotations
+
+import importlib
 
 __all__ = ["RasterGeometry", "get_spark"]
 
 __version__ = "0.1.0"
+
+# Exported lazily (PEP 562): ``python -m georaster_spark.worker_daemon``
+# runs this file before it may import pyspark.
+_LAZY = {"RasterGeometry": "georaster_spark.grid", "get_spark": "georaster_spark.session"}
+
+
+def __getattr__(name: str):
+    if name in _LAZY:
+        return getattr(importlib.import_module(_LAZY[name]), name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -157,45 +157,6 @@ def polygons() -> list[Polygon]:
     return polys
 
 
-POLYGON_SCHEMA = T.StructType(
-    [
-        T.StructField("poly_id", T.StringType(), False),
-        T.StructField(
-            "ring",
-            T.ArrayType(
-                T.StructType(
-                    [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
-                )
-            ),
-        ),
-        T.StructField(
-            "bbox",
-            T.StructType(
-                [
-                    T.StructField("xmin", T.DoubleType()),
-                    T.StructField("ymin", T.DoubleType()),
-                    T.StructField("xmax", T.DoubleType()),
-                    T.StructField("ymax", T.DoubleType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-
-def polygons_df(spark: SparkSession, polys: list[Polygon] | None = None) -> DataFrame:
-    polys = polys if polys is not None else polygons()
-    rows = [
-        (
-            p.poly_id,
-            [(float(x), float(y)) for x, y in p.ring],
-            p.bbox,
-        )
-        for p in polys
-    ]
-    return spark.createDataFrame(rows, POLYGON_SCHEMA)
-
-
 def polygon_rects_sql() -> str:
     """DuckDB VALUES table of the exact rectangle decomposition:
     (poly_id, xmin, ymin, xmax, ymax). Oracle point-in-polygon is

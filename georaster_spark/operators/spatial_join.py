@@ -8,9 +8,9 @@ cell-encode→tile-fetch→local-sample lifecycle, ``src/pmtiles.rs:37-51``):
    NumPy and **broadcast** (the polygon side is always the small
    side; no shuffle). Cells fully inside a polygon are marked
    ``full`` — documents landing there skip the exact test entirely.
-2. **Exact ray-cast** (fine): candidates from partial cells run a
-   vectorized even-odd test inside an Arrow-batched pandas UDF (no
-   per-row Python).
+2. **Exact ray-cast** (fine): candidates from partial cells run an
+   even-odd test over flat edge columns, as Column algebra inside
+   WholeStageCodegen (no Python worker).
 
 Skew: hot cells concentrate candidates. The join itself is broadcast
 (no shuffle to skew), but downstream per-cell aggregations shuffle on
@@ -25,10 +25,7 @@ unless the caller aggregates.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -89,28 +86,6 @@ def build_cover(polys: list[Polygon], res: int) -> list[tuple[int, str, bool]]:
                 )
                 out.append((cell, p.poly_id, full))
     return out
-
-
-def ray_cast_udf(spark, polys: list[Polygon]):
-    """Vectorized exact point-in-polygon as a scalar pandas UDF.
-
-    Polygon rings ship once per executor via a broadcast variable —
-    closures would re-pickle per task.
-    """
-    rings_bc = spark.sparkContext.broadcast({p.poly_id: p.ring for p in polys})
-
-    @F.pandas_udf("boolean")
-    def _inside(poly_id: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        rings = rings_bc.value
-        lonv = lon.to_numpy(np.float64)
-        latv = lat.to_numpy(np.float64)
-        out = np.zeros(len(poly_id), dtype=bool)
-        for pid in poly_id.unique():
-            m = (poly_id == pid).to_numpy()
-            out[m] = points_in_ring(lonv[m], latv[m], rings[pid])
-        return pd.Series(out)
-
-    return _inside
 
 
 def ray_cast_edge_cols(lon: Column, lat: Column, max_vertices: int) -> Column:
@@ -177,38 +152,24 @@ def pip_join(
     res: int,
     lon: Column | str = "lon",
     lat: Column | str = "lat",
-    method: str = "expr",
 ) -> DataFrame:
     """Point-in-polygon join: docs × polygons → (doc columns, poly_id).
 
     Emits one output row per (document, containing polygon) pair —
     overlapping polygons multiply rows, matching the relational
-    semantics the oracle checks.
-
-    ``method='expr'`` (default) runs the exact ray-cast as Column
-    algebra (JVM, scales linearly with cores); ``method='pandas'``
-    uses the Arrow-vectorized NumPy kernel (kept for parity and for
-    polygon sets too large to ship per-row).
+    semantics the oracle checks. The exact ray-cast runs as Column
+    algebra (JVM, scales linearly with cores).
     """
     spark = docs.sparkSession
     lon = F.col(lon) if isinstance(lon, str) else lon
     lat = F.col(lat) if isinstance(lat, str) else lat
     docs_c = docs.withColumn("cell", cell_encode_cols(lon, lat, res))
-    if method == "expr":
-        cover, max_v = cover_df(spark, polys, res)
-        cand = docs_c.join(F.broadcast(cover), "cell")
-        edge_cols = [
-            f"{p}_{j}" for j in range(max_v) for p in ("x0", "y0", "x1", "y1")
-        ]
-        return cand.where(
-            F.col("full") | ray_cast_edge_cols(lon, lat, max_v)
-        ).drop("full", *edge_cols)
-    cover = spark.createDataFrame(
-        build_cover(polys, res), "cell long, poly_id string, full boolean"
-    )
+    cover, max_v = cover_df(spark, polys, res)
     cand = docs_c.join(F.broadcast(cover), "cell")
-    inside = ray_cast_udf(spark, polys)
-    return cand.where(F.col("full") | inside(F.col("poly_id"), lon, lat)).drop("full")
+    edge_cols = [f"{p}_{j}" for j in range(max_v) for p in ("x0", "y0", "x1", "y1")]
+    return cand.where(F.col("full") | ray_cast_edge_cols(lon, lat, max_v)).drop(
+        "full", *edge_cols
+    )
 
 
 def _disk1_cells_col(cell: Column, res: int) -> Column:

@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 
 from georaster_spark.sources import icetable
 
-LINEAGE_COLS = ["stage", "part", "input_rows", "output_rows", "checksum", "committed_at"]
-
 
 def content_checksum(df: DataFrame, part_col: str, cols: list[str]) -> DataFrame:
     """Order-independent per-partition checksum:
@@ -126,18 +124,6 @@ def run_stage(
     finally:
         out.unpersist()
     return {"pending": len(in_stats), "done_before": len(done)}
-
-
-def metrics_df(spark: SparkSession, output_path: str) -> DataFrame:
-    """Lineage/metrics as a DataFrame (for rollups and dashboards)."""
-    rows = lineage_rows(output_path)
-    schema = (
-        "stage string, part long, input_rows long, output_rows long, "
-        "checksum long, committed_at double"
-    )
-    return spark.createDataFrame(
-        [[r[c] for c in LINEAGE_COLS] for r in rows] or [], schema
-    )
 
 
 def verify_text_identity(

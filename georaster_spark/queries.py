@@ -5233,7 +5233,8 @@ def q_ice_merge(spark, sf_dir):
     """Copy-on-write MERGE through the snapshot table layer (E10,
     sources/icetable.py merge_table): a deterministic CDC batch is
     applied to an orders snapshot — upserts (keys %7: price +1000),
-    inserts (new keys derived +10M for keys %97: price ×2), then
+    inserts (new keys -(k+1) for keys %97: price ×2; order keys are
+    non-negative, so inserts never hit a live key at any sf), then
     deletes (base keys %13) — each as ONE atomic snapshot commit, so
     the committed chain is base→upsert→delete and time travel to any
     pre-merge state still works (RAISED on otherwise, so a green
@@ -5250,7 +5251,7 @@ def q_ice_merge(spark, sf_dir):
 
     # the cached table embeds the CDC recipe, so the cache key must
     # too — a recipe edit must rebuild, not reuse a stale table
-    recipe = "v1:u%7+1000:i%97x2+10M:d%13"
+    recipe = "v2:u%7+1000:i%97x2-(k+1):d%13"
     tbl = os.path.join(
         tempfile.gettempdir(),
         "georaster_ice_merge_"
@@ -5270,7 +5271,7 @@ def q_ice_merge(spark, sf_dir):
             "o_totalprice", F.col("o_totalprice") + 1000.0
         )
         inserts = base.where(F.col("o_orderkey") % 97 == 0).select(
-            (F.col("o_orderkey") + 10000000).alias("o_orderkey"),
+            (-(F.col("o_orderkey") + 1)).alias("o_orderkey"),
             "o_date",
             (F.col("o_totalprice") * 2.0).alias("o_totalprice"),
         )
@@ -5305,7 +5306,7 @@ def sql_ice_merge():
       SELECT o_orderkey, o_date, o_totalprice + 1000.0e0 AS o_totalprice
       FROM base WHERE o_orderkey % 7 = 0
       UNION ALL
-      SELECT o_orderkey + 10000000, o_date, o_totalprice * 2.0e0
+      SELECT -(o_orderkey + 1), o_date, o_totalprice * 2.0e0
       FROM base WHERE o_orderkey % 97 = 0
     ),
     merged AS (

@@ -297,14 +297,15 @@ def _parse_event_log(log_dir: str, groups: list[str]) -> dict[str, dict]:
 
 
 def main() -> None:
-    from georaster_spark.session import get_spark
+    from georaster_spark.session import get_spark, host_cores
 
     log_dir = "/tmp/georaster_sf1_eventlog"
     os.makedirs(log_dir, exist_ok=True)
+    cores = host_cores()
     spark = get_spark(
         "bench_sf1",
-        cores=32,
-        shuffle_partitions=32,
+        cores=cores,
+        shuffle_partitions=cores,
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": log_dir,
@@ -332,7 +333,7 @@ def main() -> None:
         "# sf1 stress: scaling exponents + skew-join evidence",
         "",
         f"Synth sf1 = {N_DOCS:,} docs / {N_VECS:,} vectors (10x sf0.1, same",
-        "distribution shape; tools/bench_sf1.py, deterministic). local[32],",
+        f"distribution shape; tools/bench_sf1.py, deterministic). local[{cores}],",
         f"min-of-2 per cell. 1-min loadavg start/end: {load0} / {load1}",
         "(multi-tenant host).",
         "",
@@ -365,7 +366,7 @@ def main() -> None:
         "row is xxhash64-ed into a checksum so join output carries real",
         "per-row work (a bare count() is free in codegen and the build-",
         "side sort dominates uniformly, hiding the skew). Broadcast",
-        "disabled so the join actually shuffles (32 shuffle partitions);",
+        f"disabled so the join actually shuffles ({cores} shuffle partitions);",
         "for the AQE variant the skew thresholds are scaled down to this",
         "input's bytes (hot map-output partition ~MBs vs defaults tuned",
         "for 256MB): factor=3, threshold=1m, advisory=256k — disclosed.",
